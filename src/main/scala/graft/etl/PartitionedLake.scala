@@ -16,10 +16,14 @@ import org.apache.spark.sql.functions._
   * unpadded).
   *
   * Why this matters at 100 TB: predicates on the partition *columns* prune
-  * at file-listing time (`PartitionFilters` in the scan node — zero IO for
-  * excluded days), while predicates on derived expressions of a timestamp
-  * (`year(ts) = 2000`) must scan every file. A daily report over a
-  * 7-year lake reads 1/2500th of the data instead of all of it.
+  * files before any is opened (`PartitionFilters` in the scan node — zero
+  * data IO for excluded days), while predicates on derived expressions of
+  * a timestamp (`year(ts) = 2000`) must scan every file. Pruning still
+  * follows a listing of the whole directory tree, made when [[read]]
+  * builds the relation; a reader that knows its partition prefix lists
+  * that one subtree with [[readPartition]]. A daily report over a 7-year
+  * lake then lists one of 2,500 day directories and reads 1/2500th of the
+  * data.
   */
 object PartitionedLake {
 
@@ -70,9 +74,20 @@ object PartitionedLake {
   def writeDim(dim: DataFrame, path: String): Unit =
     dim.coalesce(1).write.mode("overwrite").parquet(path)
 
-  /** Partition-discovering scan of the lake (S7). */
+  /** Partition-discovering scan of the lake (S7). Lists every partition
+    * directory under `root`. */
   def read(spark: SparkSession, root: String): DataFrame =
     spark.read.parquet(root)
+
+  /** Scan of one partition prefix, e.g. `readPartition(spark, root, 2000, 6)`
+    * for `year=2000/month=6`: only that subtree is listed, and `basePath`
+    * keeps the schema of [[read]], partition columns included. None when
+    * the directory does not exist, which means the prefix has no rows. */
+  def readPartition(spark: SparkSession, root: String, values: Int*): Option[DataFrame] = {
+    require(values.size <= PartitionCols.size, s"at most ${PartitionCols.size} partition values")
+    val dir = Paths.get(root, PartitionCols.zip(values).map { case (c, v) => s"$c=$v" }: _*)
+    Option.when(Files.isDirectory(dir))(spark.read.option("basePath", root).parquet(dir.toString))
+  }
 
   /** Small-file compaction: incremental appends (3-hourly batches, ref
     * cadence) leave one file per batch per day-partition; at 100 TB that
@@ -182,9 +197,9 @@ object PartitionedLake {
 
   /** Partition-pruning twin of `ts >= day` (day granularity, inclusive):
     * the (year, month, day) tuple comparison that prunes whole day
-    * directories at file-listing time. Conservative — always AND it with
-    * the exact ts predicate; it only discards directories that cannot
-    * contain matching rows. */
+    * directories before any of their files opens. Conservative — always
+    * AND it with the exact ts predicate; it only discards directories that
+    * cannot contain matching rows. */
   def sinceDay(d: java.time.LocalDate): Column =
     col("year") > d.getYear ||
       (col("year") === d.getYear &&

@@ -405,12 +405,12 @@ object Relational {
 
     // ── P13+S8+S6: partition-window report scan — "yesterday's partition"
     //    analog (generate_report.py:24-33) — over the REAL year/month/day
-    //    partitioned lake written by graft.etl.PartitionedLake. The filter
-    //    is on the partition *columns*, so it prunes at file-listing time
-    //    (`PartitionFilters` in the scan node, asserted by LakeSpec) —
-    //    round 1 faked this with year(l_shipdate) expression filters,
-    //    which full-scan at 100 TB. The DuckDB oracle recomputes from the
-    //    raw table, so the write→read round-trip is also verified.
+    //    partitioned lake written by graft.etl.PartitionedLake. Only the
+    //    `year=2000/month=6` directory is listed and scanned
+    //    (`readPartition`) — round 1 faked this with year(l_shipdate)
+    //    expression filters, which full-scan at 100 TB. The DuckDB oracle
+    //    recomputes from the raw table, so the write→read round-trip is
+    //    also verified.
     Q("q23_partition_window_kpis",
       s"""SELECT ${moneySumSql(revSql)} AS total_revenue,
          |       count(*) AS n_tx,
@@ -418,8 +418,8 @@ object Relational {
          |FROM lineitem
          |WHERE year(l_shipdate) = 2000 AND month(l_shipdate) = 6""".stripMargin) { (s, d) =>
       val root = graft.etl.PartitionedLake.ensureLineitemLake(s, d)
-      graft.etl.PartitionedLake.read(s, root)
-        .filter(col("year") === 2000 && col("month") === 6)
+      graft.etl.PartitionedLake.readPartition(s, root, 2000, 6)
+        .getOrElse(graft.etl.PartitionedLake.read(s, root).limit(0)) // no such month: no rows
         .agg(
           moneySum(rev).as("total_revenue"),
           count(lit(1)).as("n_tx"),
@@ -591,8 +591,9 @@ object Relational {
     },
 
     // ── The full daily-report metrics job (generate_report.py:70-157):
-    //    one-day partition-pruned slice of the lake → global KPIs +
-    //    best/worst seller + fee model + net revenue in a single row.
+    //    one day's lake directory → global KPIs + best/worst seller + fee
+    //    model + net revenue in a single row, folded on the driver from
+    //    the report's one Spark action.
     //    Date parameterized (F8 "yesterday"); pinned here for determinism.
     //    The empty-day branch (ref :72-84) is unit-tested in ReportSpec.
     Q("q44_report_metrics",

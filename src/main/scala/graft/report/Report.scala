@@ -2,7 +2,7 @@ package graft.report
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.etl.PartitionedLake
@@ -12,11 +12,12 @@ import graft.model.Tables
   * generate_report.py): read exactly one day's partition from the lake,
   * compute the financial KPI set, render HTML on the driver.
   *
-  * Spark restatement of the Lambda (SURVEY §3.2): a partition-pruned scan
-  * (the `year=Y/month=M/day=D` directory — zero IO outside the day, where
-  * the reference builds the S3 prefix by hand, generate_report.py:32),
-  * a handful of small aggregates over the day slice, `collect()` of a few
-  * tiny rows into [[ReportMetrics]], template on the driver.
+  * Spark restatement of the Lambda (SURVEY §3.2): a scan of the one
+  * `year=Y/month=M/day=D` directory (nothing else is listed or read; the
+  * reference builds the S3 prefix by hand, generate_report.py:32), one
+  * Spark action collecting the day's total, per-supplier and per-method
+  * aggregates, a driver-side fold of those few rows into
+  * [[ReportMetrics]], template on the driver.
   *
   * All money rides as exact integer cents (order-independent at any
   * partition count); the fee model is the reference's 2%-of-revenue on
@@ -51,112 +52,76 @@ object Report {
     * as a parameter so tests and backfills are deterministic. */
   def yesterday(): LocalDate = LocalDate.now(java.time.ZoneOffset.UTC).minusDays(1)
 
-  private def cents(c: org.apache.spark.sql.Column) = round(c * 100).cast("long")
+  private def cents(c: Column) = round(c * 100).cast("long")
   private def rev = col("l_extendedprice") * (lit(1) - col("l_discount"))
 
-  /** The day slice — a partition-column filter over the lake, pruned at
-    * file-listing time. */
-  def daySlice(spark: SparkSession, sfDir: String, date: LocalDate): DataFrame = {
-    val root = PartitionedLake.ensureLineitemLake(spark, sfDir)
-    PartitionedLake.read(spark, root)
-      .filter(col("year") === date.getYear &&
-        col("month") === date.getMonthValue &&
-        col("day") === date.getDayOfMonth)
+  /** The day's rows: only the `year=Y/month=M/day=D` directory is listed
+    * and scanned, as the reference builds the day's S3 prefix by hand
+    * (generate_report.py:32). None when the lake has no such directory. */
+  def daySlice(spark: SparkSession, sfDir: String, date: LocalDate): Option[DataFrame] =
+    PartitionedLake.readPartition(spark, PartitionedLake.ensureLineitemLake(spark, sfDir),
+      date.getYear, date.getMonthValue, date.getDayOfMonth)
+
+  /** The report's three aggregates in one frame, one row per group,
+    * `kind` naming the grain: the total over the slice, per supplier over
+    * slice ⋈ broadcast(supplier), per method over slice ⋈ orders with the
+    * method's fee. The joins are inner, so a lineitem without a supplier
+    * or order counts toward the total only. */
+  private def aggregates(spark: SparkSession, sfDir: String, slice: DataFrame): DataFrame = {
+    def grain(kind: String, key: Column, df: DataFrame) =
+      df.groupBy(key.as("key"))
+        .agg(sum(cents(rev)).as("rc"), count(lit(1)).as("n"))
+        .withColumn("kind", lit(kind))
+        .withColumn("avg", round(col("rc") / col("n")) / 100.0)
+    val total = grain("total", lit(null).cast("string"), slice)
+    val trucks = grain("supplier", col("s_name"),
+      slice.join(broadcast(Tables.supplier(spark, sfDir)), col("l_suppkey") === col("s_suppkey")))
+    // 2% on card-like methods, rounded per method like the reference's
+    // per-method cost dict
+    val methods = grain("method", col("o_orderpriority"),
+      slice.join(Tables.orders(spark, sfDir).select("o_orderkey", "o_orderpriority"),
+        col("l_orderkey") === col("o_orderkey")))
+      .withColumn("fee", when(lower(col("key")).contains("urgent"), round(col("rc") * 0.02).cast("long"))
+        .otherwise(0L))
+    total.unionByName(trucks).unionByName(methods, allowMissingColumns = true)
   }
 
-  /** Single-row scalar-metrics plan (the CORRECTNESS-gated face of the
-    * report; the list-valued tables are separate tiny aggregates consumed
-    * by [[run]]). Deterministic ties: best/worst break on
-    * (revenue, name) exactly like q18. */
-  def metricsDF(spark: SparkSession, sfDir: String, date: LocalDate): DataFrame =
-    metricsDFFrom(spark, sfDir, date, daySlice(spark, sfDir, date))
-
-  /** Same plan over a caller-supplied (typically cached) slice — the seam
-    * [[metrics]] uses so one scan of the lake feeds every aggregate of the
-    * report run. */
-  def metricsDFFrom(spark: SparkSession, sfDir: String, date: LocalDate,
-                    slice: DataFrame): DataFrame = {
-    val tot = slice.agg(
-      coalesce(sum(cents(rev)), lit(0L)).as("rc"),
-      count(lit(1)).as("n_tx"))
-
-    val tieKey = concat(format_string("%020d", col("rc")), col("s_name"))
-    val bestWorst = slice
-      .join(broadcast(Tables.supplier(spark, sfDir)), col("l_suppkey") === col("s_suppkey"))
-      .groupBy("s_name").agg(sum(cents(rev)).as("rc"))
-      .agg(
-        coalesce(max_by(col("s_name"), tieKey), lit("n/a")).as("best_truck"),
-        coalesce(max("rc"), lit(0L)).as("best_rc"),
-        coalesce(min_by(col("s_name"), tieKey), lit("n/a")).as("worst_truck"),
-        coalesce(min("rc"), lit(0L)).as("worst_rc"))
-
-    val fees = perPaymentDF(spark, sfDir, slice)
-      .agg(coalesce(sum("fee_cents"), lit(0L)).as("fee_c"))
-
-    tot.crossJoin(bestWorst).crossJoin(fees).select(
-      lit(date.toString).as("report_date"),
-      (col("rc") / 100.0).as("total_revenue"),
-      col("n_tx"),
-      when(col("n_tx") === 0, 0.0)
-        .otherwise(round(col("rc") / col("n_tx")) / 100.0).as("avg_tx"),
-      col("best_truck"),
-      (col("best_rc") / 100.0).as("best_revenue"),
-      col("worst_truck"),
-      (col("worst_rc") / 100.0).as("worst_revenue"),
-      (col("fee_c") / 100.0).as("total_fees"),
-      ((col("rc") - col("fee_c")) / 100.0).as("net_revenue"))
-  }
-
-  /** Per-payment-method revenue + processing fee (2% on card-like methods,
-    * group-level rounding like the reference's per-method cost dict). */
-  def perPaymentDF(spark: SparkSession, sfDir: String, slice: DataFrame): DataFrame =
-    slice
-      .join(Tables.orders(spark, sfDir).select("o_orderkey", "o_orderpriority"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_orderpriority").as("method"))
-      .agg(sum(cents(rev)).as("rc"))
-      .select(
-        col("method"), col("rc"),
-        when(lower(col("method")).contains("urgent"), round(col("rc") * 0.02).cast("long"))
-          .otherwise(0L).as("fee_cents"))
-
-  /** Per-truck revenue table (ref generate_report.py:92-96). */
-  def perTruckDF(spark: SparkSession, sfDir: String, slice: DataFrame): DataFrame =
-    slice
-      .join(broadcast(Tables.supplier(spark, sfDir)), col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("s_name").as("name"))
-      .agg(sum(cents(rev)).as("rc"), count(lit(1)).as("n_tx"))
-      .select(col("name"), (col("rc") / 100.0).as("revenue"), col("n_tx"),
-        (round(col("rc") / col("n_tx")) / 100.0).as("avg_tx"))
-      .orderBy(col("rc").desc, col("name"))
-
-  /** Run the full report job for one date: metrics + tables collected into
-    * the case class. The day slice is cached, so the (already
-    * partition-pruned) lake is scanned ONCE per run — the scalar metrics,
-    * the per-truck table and the per-payment table all aggregate the
-    * in-memory slice (asserted by ReportSpec). */
+  /** The report for one date: one Spark action collects [[aggregates]],
+    * and the driver folds its rows in exact cents. Best and worst order
+    * by (revenue, name), as q18 breaks ties. A day without a directory
+    * starts no Spark job. */
   def metrics(spark: SparkSession, sfDir: String, date: LocalDate): ReportMetrics = {
-    val slice = daySlice(spark, sfDir, date).cache()
-    try metricsFrom(spark, sfDir, date, slice)
-    finally { val _ = slice.unpersist() }
+    val rows = daySlice(spark, sfDir, date).fold(Array.empty[Row])(aggregates(spark, sfDir, _).collect())
+    def rowsOf(kind: String) = rows.filter(_.getAs[String]("kind") == kind).toSeq
+    val (rc, n, avg) = rowsOf("total").headOption
+      .fold((0L, 0L, 0.0))(r => (r.getAs[Long]("rc"), r.getAs[Long]("n"), r.getAs[Double]("avg")))
+    val trucks = rowsOf("supplier").map(r => (r.getAs[Long]("rc"), r.getAs[String]("key"), r))
+    val best = trucks.maxByOption(t => (t._1, t._2))
+    val worst = trucks.minByOption(t => (t._1, t._2))
+    val methods = rowsOf("method").sortBy(_.getAs[String]("key"))
+    val fees = methods.map(_.getAs[Long]("fee")).sum
+    ReportMetrics(
+      reportDate = date.toString,
+      totalRevenue = rc / 100.0, nTx = n, avgTx = avg,
+      bestTruck = best.fold("n/a")(_._2), bestRevenue = best.fold(0L)(_._1) / 100.0,
+      worstTruck = worst.fold("n/a")(_._2), worstRevenue = worst.fold(0L)(_._1) / 100.0,
+      totalFees = fees / 100.0, netRevenue = (rc - fees) / 100.0,
+      perTruck = trucks.sortBy(t => (-t._1, t._2)).map { case (c, name, r) =>
+        TruckRow(name, c / 100.0, r.getAs[Long]("n"), r.getAs[Double]("avg"))
+      },
+      perPayment = methods.map(r =>
+        PaymentRow(r.getAs[String]("key"), r.getAs[Long]("rc") / 100.0, r.getAs[Long]("fee") / 100.0)))
   }
 
-  private def metricsFrom(spark: SparkSession, sfDir: String, date: LocalDate,
-                          slice: DataFrame): ReportMetrics = {
-    val m = metricsDFFrom(spark, sfDir, date, slice).collect()(0)
-    val trucks = perTruckDF(spark, sfDir, slice).collect().toSeq.map { r =>
-      TruckRow(r.getString(0), r.getDouble(1), r.getLong(2), r.getDouble(3))
-    }
-    val pays = perPaymentDF(spark, sfDir, slice).orderBy("method").collect().toSeq.map { r =>
-      PaymentRow(r.getString(0), r.getLong(1) / 100.0, r.getLong(2) / 100.0)
-    }
-    ReportMetrics(
-      reportDate = m.getString(0),
-      totalRevenue = m.getDouble(1), nTx = m.getLong(2), avgTx = m.getDouble(3),
-      bestTruck = m.getString(4), bestRevenue = m.getDouble(5),
-      worstTruck = m.getString(6), worstRevenue = m.getDouble(7),
-      totalFees = m.getDouble(8), netRevenue = m.getDouble(9),
-      perTruck = trucks, perPayment = pays)
+  /** [[metrics]]' scalar fields as one row: the CORRECTNESS-gated face of
+    * the report (q44). */
+  def metricsDF(spark: SparkSession, sfDir: String, date: LocalDate): DataFrame = {
+    import spark.implicits._
+    val m = metrics(spark, sfDir, date)
+    Seq((m.reportDate, m.totalRevenue, m.nTx, m.avgTx, m.bestTruck, m.bestRevenue,
+      m.worstTruck, m.worstRevenue, m.totalFees, m.netRevenue))
+      .toDF("report_date", "total_revenue", "n_tx", "avg_tx", "best_truck", "best_revenue",
+        "worst_truck", "worst_revenue", "total_fees", "net_revenue")
   }
 
   /** Driver-side HTML render (ref generate_report.py:160-387). */

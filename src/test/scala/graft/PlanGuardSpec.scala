@@ -17,7 +17,6 @@ class PlanGuardSpec extends AnyFunSuite {
   private val allowedNestedLoop = Map(
     "q39_ann_brute_topk"     -> "5-row query batch (exact-scan baseline)",
     "q40_ann_ivf_topk"       -> "query batch × centroid table (tiny × tiny)",
-    "q44_report_metrics"     -> "cross join of single-row aggregates",
     "q45_embedding_near_dup" -> "sampled baseline capped at 500 rows",
     "q49_range_join_price_bands" -> "5-row literal interval dimension",
     "q55_dash_kpis"          -> "cross join of single-row aggregates",
